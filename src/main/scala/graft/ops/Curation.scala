@@ -110,8 +110,9 @@ object Curation {
     *
     * Scale shape: each stage composes operators that individually carry
     * their 100 TB contract (scan-stage gates, fingerprint-only and
-    * candidate-set-only shuffles, span text never moving); the counts are
-    * one aggregate per stage over the lazily-shared plan prefix.
+    * candidate-set-only shuffles, span text never moving); the document
+    * counts are one aggregate over the stages' checkpointed decision table
+    * (the [[recipePrefixDecisions]] chain without its decontam stage).
     */
   def cleanCorpusV3Stats(docs: DataFrame, minTokens: Int = 10,
       maxNonAlnum: Double = 0.35, maxStopword: Double = 0.7,
@@ -236,7 +237,14 @@ object Curation {
       prefix = prefix)
   }
 
-  private def recipeStats(docs0: DataFrame,
+  /** A stage's DECISION as an id-only set (localCheckpoint): decision-
+    * sized, not corpus-sized, and the stage counts over it do not
+    * recompute the whole upstream chain per count.
+    */
+  private def ids(df: DataFrame): DataFrame =
+    df.select("doc_id").localCheckpoint()
+
+  private def recipeStats(docs: DataFrame,
       decontam: Option[(DataFrame, Int)],
       ppl: Option[Seq[Double]], minTokens: Int,
       maxNonAlnum: Double, maxStopword: Double,
@@ -244,146 +252,64 @@ object Curation {
       semDecontam: Option[(DataFrame, Double)] = None,
       resampleK: Option[Int] = None,
       prefix: Option[DataFrame] = None): DataFrame = {
-    // fan ONCE at entry, but only when the recipe COMPUTES its stages from
-    // the corpus (no prefix): there every stage re-scans `docs` with a
-    // heavy row-pure kernel (gate, fingerprints, SNM tokens, decontam
-    // grams, surprisal). With a standing prefix table the shared stages
-    // are flag scans of `p` and `docs` only feeds bounded joins
-    // (spans/resample), where the extra exchange measured as a net loss
-    // (ablation r16) — there the internal op-level fans
-    // (spanFingerprints etc.) cover the heavy passes. Round 17: the
-    // FLOORED fan, not the kernel fan — after the one-checkpoint decision
-    // table landed, the r16 "−1.5 s on v3" flipped to +0.73 s under the
-    // 5-pass warm ablation (the six stage scans each pay the 32-way
-    // exchange's task tax on a sub-MB local table); the floor keeps the
-    // fan for a genuinely large starved corpus scan.
-    val docs = if (prefix.isEmpty) Par.fanOut(docs0) else docs0
-    // Each stage's DECISION is materialized as an id-only set
-    // (localCheckpoint): six stage counts over a lazily-shared plan would
-    // otherwise recompute the whole upstream chain per count — the span
-    // aggregates alone re-ran gate+fingerprint+SNM twice each (measured
-    // 2× end-to-end at sf0.1). Ids-and-booleans are decision-sized, not
-    // corpus-sized — the same contract as nearDupClusters' checkpointed
-    // label table; the corpus TEXT is still scanned exactly once per stage
-    // that derives from it (gate, fingerprints, SNM tokens, spans) and
-    // never shuffled. With a `prefix` table
-    // ([[recipePrefixDecisions]]/[[recipePrefixSemExtend]] — normally a
-    // STANDING artifact) the shared stages come from flag scans of the
-    // materialized table instead: five recipe variants per snapshot then
-    // pay the gate→dedup→SNM→decontam (→sem) chain once, not five times.
-    def ids(df: DataFrame): DataFrame = df.select("doc_id").localCheckpoint()
-    val (qualityIds, exactIds, nearIds, lastIds, semIds, prefixScored,
-      prefixStageRows) =
-    prefix match {
-      case Some(p) =>
-        require(decontam.isDefined,
-          "recipeStats: a prefix table always covers the lexical " +
-            "decontam stage — pass its config so stage naming matches")
-        require(semDecontam.isEmpty == !p.columns.contains("sem"),
-          "recipeStats: the prefix table's stages (sem flag present = " +
-            "built by recipePrefixSemExtend) must match the semDecontam " +
-            "argument — the score column is fitted on the LAST covered " +
-            "stage's survivors")
-        // ONE checkpoint of the whole decision table (round 17), not six:
-        // the per-stage id-sets and the fitted scores are lazy WHERE
-        // views of this single materialized frame — each stage count
-        // then scans a decision-sized in-memory table instead of paying
-        // its own checkpoint job (6 eager jobs → 1 per variant; the
-        // v5–v9 family invokes this five times per snapshot). A caller
-        // passing an UNMATERIALIZED recipePrefixDecisions result now
-        // executes the gate→dedup→SNM→decontam chain exactly once here
-        // (it previously ran once per flag checkpoint).
-        val lastFlag = if (semDecontam.isDefined) "sem" else "dc"
-        val pc = p.select(
-          Seq(col("doc_id"), col("q"), col("ex"), col("nd"), col("dc")) ++
-            (if (semDecontam.isDefined) Seq(col("sem")) else Nil) :+
-            col("avg_surprisal"): _*)
-          .localCheckpoint()
-        val sel = (f: String) => pc.where(col(f)).select("doc_id")
-        // round 17b: the five/six prefix-covered stage COUNTS come off ONE
-        // aggregate over pc instead of one count job per stage (s1 = pc's
-        // row count — identical to counting `docs` by the prefix contract:
-        // the flag table carries every input document). Integer sums, so
-        // the collapse cannot change any value; v5–v9 drop ~10 AQE jobs
-        // each (34–51 jobs measured, mostly 1-task count stages).
-        val flagNames = Seq("s1_raw" -> None, "s2_quality" -> Some("q"),
-          "s3_exact_dedup" -> Some("ex"), "s4_near_dedup" -> Some("nd"),
-          "s5_decontam" -> Some("dc")) ++
-          (if (semDecontam.isDefined) Seq("s6_sem_decontam" -> Some("sem"))
-           else Nil)
-        val flagAggs = flagNames.zipWithIndex.map {
-          case ((_, None), i)    => count(lit(1)).as(s"c$i")
-          case ((_, Some(f)), i) =>
-            coalesce(sum(col(f).cast("long")), lit(0L)).as(s"c$i")
-        }
-        val stackSql = s"stack(${flagNames.size}, " + flagNames.zipWithIndex
-          .map { case ((nm, _), i) => s"'$nm', c$i" }.mkString(", ") +
-          ") AS (stage, n)"
-        val stageRows = pc.agg(flagAggs.head, flagAggs.tail: _*)
-          .select(expr(stackSql))
-        (sel("q"), sel("ex"), sel("nd"), sel("dc"), sel(lastFlag),
-          Some(pc.where(col(lastFlag) && col("avg_surprisal").isNotNull)
-            .select(col("doc_id"), col("avg_surprisal"))),
-          Some(stageRows))
-      case None =>
-        val quality = docs.where(TextAnalysis.curationGate(col("text"),
-          lit(minTokens), maxNonAlnum, maxStopword, langLabel = None))
-        val qualityIds = ids(quality)
-        val qualityDocs = docs.join(qualityIds, Seq("doc_id"), "left_semi")
-        val exactIds = ids(dedupSurvivors(qualityDocs))
-        val exactDocs = docs.join(exactIds, Seq("doc_id"), "left_semi")
-        val nearIds = ids(Dedup.dedupCorpus(exactIds,
-          Dedup.sortedNeighborPairs(exactDocs, threshold = snmThreshold)))
-        // optional decontamination stage (v4): id-only decision like every
-        // other stage — gram generation runs over the near-dedup SURVIVORS
-        // only, and the eval gram set broadcasts (bounded benchmark)
-        val lastIds = decontam match {
-          case None => nearIds
-          case Some((evalSet, n)) =>
-            ids(Decontam.decontaminate(
-              docs.join(nearIds, Seq("doc_id"), "left_semi")
-                .select("doc_id", "text"),
-              evalSet, "doc_id", "text", n))
-        }
-        // optional SEMANTIC decontamination stage (v8): paraphrase-robust —
-        // hashed-vector cosine vs the broadcast eval assignment under argmax
-        // blocking, dropping what s5's n-gram match cannot see. A doc whose
-        // hashed vector is zero-norm has no verdict row and is dropped with
-        // the contaminated (no direction ⇒ not comparable — the Similarity
-        // unitVecs convention; unreachable in practice behind the
-        // minTokens gate)
-        val semIds = semDecontam match {
-          case None => lastIds
-          case Some((evalSet, minCos)) =>
-            ids(Decontam.semanticContamination(
-              docs.join(lastIds, Seq("doc_id"), "left_semi")
-                .select("doc_id", "text"),
-              evalSet, minCos)
-              .where(col("is_contam") === 0)
-              .select(col("vec_id").as("doc_id")))
-        }
-        (qualityIds, exactIds, nearIds, lastIds, semIds, None, None)
+    // The shared stages (gate → exact → near → lexical decontam → sem)
+    // always come from ONE decision table: the caller's `prefix` —
+    // normally a STANDING artifact built by [[recipePrefixDecisions]]/
+    // [[recipePrefixSemExtend]], so five recipe variants per snapshot pay
+    // the chain once, not five times — or, without one, the same table
+    // built here from `docs`. `avg_surprisal` is fitted only when a
+    // perplexity stage reads it; a sem-bearing table refits it on the sem
+    // survivors, so the lexical table then skips its own fit.
+    val p = prefix.getOrElse {
+      val lexical = recipePrefixDecisions(docs, decontam, minTokens,
+        maxNonAlnum, maxStopword, snmThreshold,
+        scored = ppl.isDefined && semDecontam.isEmpty)
+      semDecontam.fold(lexical) { case (evalSet, minCos) =>
+        recipePrefixSemExtend(lexical, docs, evalSet, minCos)
+      }
     }
-    // optional perplexity-percentile stage (v5/v6): fit unigram surprisal
-    // on the current survivors, keep each quantile bucket at its rate —
-    // v5's 0/1 rates make the hash predicate degenerate (always / never
-    // keep, fully deterministic); v6's fractional rates thin buckets via
-    // the deterministic hash-sample predicate. With a prefix table the
-    // fitted scores are already materialized columns of it.
+    require(decontam.isDefined == p.columns.contains("dc"),
+      "recipeStats: the prefix table's lexical decontam stage (dc flag) " +
+        "must match the decontam argument so stage naming matches")
+    require(semDecontam.isEmpty == !p.columns.contains("sem"),
+      "recipeStats: the prefix table's stages (sem flag present = " +
+        "built by recipePrefixSemExtend) must match the semDecontam " +
+        "argument — the score column is fitted on the LAST covered " +
+        "stage's survivors")
+    val semIdx = 5 + (if (decontam.isDefined) 1 else 0)
+    val flagNames = Seq("s1_raw" -> None, "s2_quality" -> Some("q"),
+      "s3_exact_dedup" -> Some("ex"), "s4_near_dedup" -> Some("nd")) ++
+      decontam.map(_ => "s5_decontam" -> Some("dc")) ++
+      semDecontam.map(_ => s"s${semIdx}_sem_decontam" -> Some("sem"))
+    val lastFlag = flagNames.last._2.get
+    // ONE checkpoint of the whole decision table, not one per stage: the
+    // stage survivor sets and the fitted scores are lazy WHERE views of
+    // this single materialized frame — each stage then scans a decision-
+    // sized in-memory table instead of paying its own checkpoint job. A
+    // caller passing an UNMATERIALIZED prefix table executes the stage
+    // chain exactly once here. Ids-and-booleans are decision-sized, not
+    // corpus-sized: the corpus TEXT is scanned once per stage that derives
+    // from it and never shuffled. The score column rides along whenever
+    // the table carries one (a table built here carries it only for a
+    // perplexity stage).
+    val pc = p.select(Seq(col("doc_id")) ++ flagNames.flatMap(_._2).map(col) ++
+        p.columns.filter(_ == "avg_surprisal").map(col): _*)
+      .localCheckpoint()
+    val lastIds = pc.where(col(lastFlag)).select("doc_id")
+    // optional perplexity-percentile stage (v5/v6): unigram surprisal
+    // fitted on the current survivors (the table's score column), each
+    // quantile bucket kept at its rate — v5's 0/1 rates make the hash
+    // predicate degenerate (always / never keep, fully deterministic);
+    // v6's fractional rates thin buckets via the deterministic hash-sample
+    // predicate. Zero-token documents have no score and drop here. The
+    // quantile dictionary is fit+applied directly: perplexityMix's
+    // internal persist would leak one cache entry per recipe invocation
+    // (its documented caveat).
     val pplIds = ppl match {
-      case None => semIds
+      case None => lastIds
       case Some(rates) =>
-        // (id, score) is decision-sized: localCheckpoint it like every
-        // other stage decision, then fit+apply the quantile dictionary
-        // directly — perplexityMix's internal persist would leak one
-        // cache entry per recipe invocation (its documented caveat)
-        val scored = prefixScored.getOrElse {
-          val surv = docs.join(semIds, Seq("doc_id"), "left_semi")
-          TextAnalysis.surprisalScores(
-              surv.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("avg_surprisal"))
-            .localCheckpoint()
-        }
+        val scored = pc.where(col(lastFlag) && col("avg_surprisal").isNotNull)
+          .select(col("doc_id"), col("avg_surprisal"))
         ids(Sampling.perplexityMixApply(scored,
           Sampling.perplexityBuckets(scored, "avg_surprisal", rates.length),
           "doc_id", "avg_surprisal", rates).select("doc_id"))
@@ -403,15 +329,27 @@ object Curation {
           TextAnalysis.bucketCounts(docs.select(len), "len", RESAMPLE_EDGES),
           "len", RESAMPLE_EDGES, kF, "doc_id").select("doc_id"))
     }
-    val spanIdx = 5 + (if (decontam.isDefined) 1 else 0) +
-      (if (semDecontam.isDefined) 1 else 0) +
-      (if (ppl.isDefined) 1 else 0) +
+    val pplIdx = semIdx + (if (semDecontam.isDefined) 1 else 0)
+    val spanIdx = pplIdx + (if (ppl.isDefined) 1 else 0) +
       (if (resampleK.isDefined) 1 else 0)
     val spanPrefix = s"s$spanIdx"
     val spans = Dedup.spanDedup(docs.join(resIds, Seq("doc_id"), "left_semi"),
       spanTokens)
     def stage(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n")).select(lit(name).as("stage"), col("n"))
+    // the table-covered stage counts come off ONE aggregate over pc (s1 =
+    // pc's row count — the flag table carries every input document).
+    // Integer sums, so the collapse cannot change any value.
+    val flagAggs = flagNames.zipWithIndex.map {
+      case ((_, None), i)    => count(lit(1)).as(s"c$i")
+      case ((_, Some(f)), i) =>
+        coalesce(sum(col(f).cast("long")), lit(0L)).as(s"c$i")
+    }
+    val stackSql = s"stack(${flagNames.size}, " + flagNames.zipWithIndex
+      .map { case ((nm, _), i) => s"'$nm', c$i" }.mkString(", ") +
+      ") AS (stage, n)"
+    val flagStages = pc.agg(flagAggs.head, flagAggs.tail: _*)
+      .select(expr(stackSql))
     // ONE aggregate for both span sums, stacked into two rows: two
     // separate .agg calls over the lazy `spans` frame re-ran the whole
     // span-dedup pass (gate-survivor scan + span fingerprint shuffle)
@@ -423,27 +361,10 @@ object Curation {
         coalesce(sum(col("n_kept")), lit(0)).cast("long").as("kept"))
       .select(expr(s"stack(2, '${spanPrefix}_spans_total', total, " +
         s"'${spanPrefix}_spans_kept', kept) AS (stage, n)"))
-    val semIdx = 5 + (if (decontam.isDefined) 1 else 0)
-    // prefix path: all covered stage counts ride the ONE pc aggregate
-    // built above; compute-from-corpus path: per-stage counts over the
-    // checkpointed id frames, as before
-    val withSem = prefixStageRows.getOrElse {
-      val base = stage("s1_raw", docs)
-        .unionByName(stage("s2_quality", qualityIds))
-        .unionByName(stage("s3_exact_dedup", exactIds))
-        .unionByName(stage("s4_near_dedup", nearIds))
-      val withDec =
-        if (decontam.isDefined) base.unionByName(stage("s5_decontam", lastIds))
-        else base
-      if (semDecontam.isDefined)
-        withDec.unionByName(stage(s"s${semIdx}_sem_decontam", semIds))
-      else withDec
-    }
-    val pplIdx = semIdx + (if (semDecontam.isDefined) 1 else 0)
     val withPpl =
       if (ppl.isDefined)
-        withSem.unionByName(stage(s"s${pplIdx}_perplexity", pplIds))
-      else withSem
+        flagStages.unionByName(stage(s"s${pplIdx}_perplexity", pplIds))
+      else flagStages
     (if (resampleK.isDefined)
        withPpl.unionByName(stage(s"s${spanIdx - 1}_resample", resIds))
      else withPpl)
@@ -469,8 +390,21 @@ object Curation {
   def recipePrefixDecisions(docs: DataFrame, evalSet: DataFrame,
       minTokens: Int = 10, maxNonAlnum: Double = 0.35,
       maxStopword: Double = 0.7, snmThreshold: Double = 0.9,
-      contamN: Int = 13): DataFrame = {
-    def ids(df: DataFrame): DataFrame = df.select("doc_id").localCheckpoint()
+      contamN: Int = 13): DataFrame =
+    recipePrefixDecisions(docs, Some((evalSet, contamN)), minTokens,
+      maxNonAlnum, maxStopword, snmThreshold, scored = true)
+
+  /** The stage chain behind [[recipePrefixDecisions]], with the lexical
+    * decontam stage optional (v3 has none; the `dc` flag is then absent)
+    * and `avg_surprisal` fitted on the last stage's survivors only when
+    * `scored`. Each stage's decision is an id-only localCheckpoint on its
+    * own line: a traced run attributes the SQL executions inside this
+    * method to stages by their call-site line here.
+    */
+  private def recipePrefixDecisions(docs: DataFrame,
+      decontam: Option[(DataFrame, Int)], minTokens: Int,
+      maxNonAlnum: Double, maxStopword: Double, snmThreshold: Double,
+      scored: Boolean): DataFrame = {
     val qualityIds = ids(Par.fanOutKernel(docs).where(TextAnalysis.curationGate(col("text"),
       lit(minTokens), maxNonAlnum, maxStopword, langLabel = None)))
     val exactIds = ids(dedupSurvivors(
@@ -479,33 +413,38 @@ object Curation {
       Dedup.sortedNeighborPairs(
         docs.join(exactIds, Seq("doc_id"), "left_semi"),
         threshold = snmThreshold)))
-    val dcIds = ids(Decontam.decontaminate(
-      docs.join(nearIds, Seq("doc_id"), "left_semi")
-        .select("doc_id", "text"),
-      evalSet, "doc_id", "text", contamN))
+    val dcIds = decontam match {
+      case None => None
+      case Some((evalSet, contamN)) => Some(ids(Decontam.decontaminate(
+        docs.join(nearIds, Seq("doc_id"), "left_semi")
+          .select("doc_id", "text"),
+        evalSet, "doc_id", "text", contamN)))
+    }
     flagTable(docs,
-      Seq("q" -> qualityIds, "ex" -> exactIds, "nd" -> nearIds,
-        "dc" -> dcIds),
-      surprisalOver(docs, dcIds))
+      Seq("q" -> qualityIds, "ex" -> exactIds, "nd" -> nearIds) ++
+        dcIds.map("dc" -> _),
+      if (scored) Some(surprisalOver(docs, dcIds.getOrElse(nearIds)))
+      else None)
   }
 
   /** Extend a [[recipePrefixDecisions]] table with the v8/v9 semantic
     * decontamination stage: adds the `sem` flag over the `dc` survivors
     * and REFITS `avg_surprisal` on the `sem` survivors (the perplexity
     * gate of a sem-bearing recipe fits its LM on what semantic decontam
-    * let through — a different corpus than `dc`). Same sem semantics as
-    * the inline stage: zero-norm hashed vectors drop with the
-    * contaminated.
+    * let through — a different corpus than `dc`). A doc whose hashed
+    * vector is zero-norm has no verdict row and drops with the
+    * contaminated (no direction ⇒ not comparable — the Similarity
+    * unitVecs convention).
     */
   def recipePrefixSemExtend(prefix: DataFrame, docs: DataFrame,
       evalSet: DataFrame, semMinCos: Double): DataFrame = {
-    val dcIds = prefix.where(col("dc")).select("doc_id").localCheckpoint()
-    val semIds = Decontam.semanticContamination(
+    val dcIds = ids(prefix.where(col("dc")))
+    val semIds = ids(Decontam.semanticContamination(
         docs.join(dcIds, Seq("doc_id"), "left_semi")
           .select("doc_id", "text"),
         evalSet, semMinCos)
       .where(col("is_contam") === 0)
-      .select(col("vec_id").as("doc_id")).localCheckpoint()
+      .select(col("vec_id").as("doc_id")))
     prefix.drop("avg_surprisal")
       .join(semIds.withColumn("sem", lit(true)), Seq("doc_id"), "left")
       .withColumn("sem", coalesce(col("sem"), lit(false)))
@@ -519,11 +458,14 @@ object Curation {
       .select(col("doc_id"), col("avg_surprisal"))
 
   private def flagTable(docs: DataFrame, flags: Seq[(String, DataFrame)],
-      scored: DataFrame): DataFrame =
-    flags.foldLeft(docs.select("doc_id")) { case (acc, (name, set)) =>
-      acc.join(set.withColumn(name, lit(true)), Seq("doc_id"), "left")
-        .withColumn(name, coalesce(col(name), lit(false)))
-    }.join(scored, Seq("doc_id"), "left")
+      scored: Option[DataFrame]): DataFrame = {
+    val flagged = flags.foldLeft(docs.select("doc_id")) {
+      case (acc, (name, set)) =>
+        acc.join(set.withColumn(name, lit(true)), Seq("doc_id"), "left")
+          .withColumn(name, coalesce(col(name), lit(false)))
+    }
+    scored.fold(flagged)(flagged.join(_, Seq("doc_id"), "left"))
+  }
 
   /** The INGEST GATE — the crawl-to-corpus front door, composed from the
     * STANDING artifacts the batch pipeline already maintains so a new

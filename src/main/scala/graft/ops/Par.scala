@@ -63,24 +63,11 @@ object Par {
   private val decided =
     new java.util.concurrent.ConcurrentHashMap[(Int, Boolean, Int, Int, Int), Boolean]()
 
-  /** Ablation kill switch (GRAFT_FANOUT=0): makes fanOut the identity so
-    * a fan/no-fan A/B runs in one JVM — measurement tooling, not a perf
-    * knob; the default (on) is the optimized path.
-    */
-  private val enabled = sys.env.getOrElse("GRAFT_FANOUT", "1") != "0"
-  /** Ablation-only toggle for [[graft.tools.AblateFan]]; package-private
-    * so a library consumer cannot silently disable the optimization.
-    */
-  @volatile private[graft] var forceOff = false
-
   /** Minimum planned scan bytes per core before [[fanOut]] inserts the
-    * exchange (default 4 MB/core; override via GRAFT_FANOUT_FLOOR_MB for
-    * measurement). Below it the per-row work a guarded site protects is
-    * cheaper than the 32-way exchange itself.
+    * exchange (4 MB/core). Below it the per-row work a guarded site
+    * protects is cheaper than the 32-way exchange itself.
     */
-  private val floorBytesPerCore: Long =
-    sys.env.get("GRAFT_FANOUT_FLOOR_MB").map(_.toDouble)
-      .map(mb => (mb * 1024 * 1024).toLong).getOrElse(4L * 1024 * 1024)
+  private val floorBytesPerCore: Long = 4L * 1024 * 1024
 
   /** Guarded fan: starvation probe AND the bytes-per-core floor. */
   def fanOut(df: DataFrame): DataFrame = fan(df, floored = true)
@@ -92,29 +79,7 @@ object Par {
     */
   def fanOutKernel(df: DataFrame): DataFrame = fan(df, floored = false)
 
-  /** Post-materialization spread (round 17b): a `localCheckpoint`ed
-    * decision-sized frame inherits its parent's FINAL partitioning, which
-    * under AQE's small-data coalescing is often ONE partition locally —
-    * and [[fanOut]]'s plan probe cannot see that (the plan carries a
-    * shuffle, so it is "not starved" in the §2.5 sense; the starvation
-    * only exists in the materialized RDD). When such a frame feeds
-    * row-AMPLIFYING work (a replicas× explode, a per-row kernel grid),
-    * that work runs single-task. This helper reads the materialized
-    * partition count (metadata — the frame is already an RDD, no job)
-    * and spreads only when starved; at scale a checkpointed frame is
-    * already wide and this is the identity. Use ONLY downstream of a
-    * checkpoint and only above row-pure work — same placement caveats
-    * as [[fanOut]].
-    */
-  def spreadCheckpointed(df: DataFrame): DataFrame = {
-    if (!enabled || forceOff) return df
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (cores <= 1) return df
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
-  }
-
   private def fan(df: DataFrame, floored: Boolean): DataFrame = {
-    if (!enabled || forceOff) return df
     // streaming frames: micro-batch partitioning is the source's business
     // (and the probe below cannot run on an unstarted stream)
     if (df.isStreaming) return df

@@ -809,7 +809,8 @@ object Similarity {
     * (the standard storage/compute trade of multi-probe LSH).
     *
     * Default = 2 tables WITH multi-probe: the measured Pareto point on the
-    * sf0.1 corpus (graft.tools.MeasureLsh — recall 0.47 vs 0.23 for the
+    * sf0.1 corpus (`git show 613271b:src/main/scala/graft/tools/
+    * MeasureLsh.scala` — recall 0.47 vs 0.23 for the
     * old 4-table/no-probe config, fastest of the sweep, half the index
     * storage, and 1.0 recall on the cos≥0.6 pairs a dedup pipeline acts
     * on; the old default found NONE of those). On quasi-orthogonal
@@ -931,7 +932,8 @@ object Similarity {
     * partitioning). Exact-block match means a true near-dup pair straddling
     * one sign boundary is missed (recall, not precision, is approximate —
     * the standard single-probe LSH trade measured for the hyperplane
-    * variant in MeasureLsh); precision is exact because candidates are
+    * variant by `git show 613271b:src/main/scala/graft/tools/
+    * MeasureLsh.scala`); precision is exact because candidates are
     * rescored.
     */
   def semanticDedupFlags(emb: DataFrame, minCos: Double = 0.95,

@@ -2587,8 +2587,13 @@ object TextAnalysis {
     // single-task (1243ms/1t of a 1.79 s query). Spread the materialized
     // frame for the REPLICA path only — the observed aggregate stays on
     // `base`, so delta_obs is bit-identical; per-replica sums q6-round
-    // before the comparison (oracle-gated green at all three SFs).
-    val deltas = Par.spreadCheckpointed(base)
+    // before the comparison (oracle-gated green at all three SFs). `base`
+    // is checkpointed above, so its partition count is RDD metadata (no
+    // job); at scale it is already wide and the spread is skipped.
+    val cores = spark.sparkContext.defaultParallelism
+    val spread =
+      if (base.rdd.getNumPartitions < cores) base.repartition(cores) else base
+    val deltas = spread
       .select(col("_id"), col("_d"),
         explode(sequence(lit(0), lit(replicas - 1))).as("_r"))
       .select(col("_r"),

@@ -5,17 +5,16 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
 import graft.streaming.StreamingOps
 
-/** Recall measurement for [[StreamingOps.streamingNearDedup]] against the
-  * batch MinHash+LSH decision at equal threshold — the empirical evidence
-  * behind the single-band pre-filter's documented s^bandRows recall claim
-  * (which was previously analytical only). Results in NOTES.md.
-  *
-  * Run: sbt "runMain graft.tools.MeasureStreamDedup /root/testdata/sf0.01"
+/** Replay helpers for measuring [[StreamingOps.streamingNearDedup]] recall
+  * against the batch MinHash+LSH decision at equal threshold — the
+  * empirical evidence behind the single-band pre-filter's documented
+  * s^bandRows recall claim. The StreamingSpec recall pin runs them; the
+  * sweep main behind the NOTES.md figures is in git history
+  * (`git show 613271b:src/main/scala/graft/tools/MeasureStreamDedup.scala`).
   */
 object MeasureStreamDedup {
 
@@ -23,9 +22,7 @@ object MeasureStreamDedup {
 
   /** Replay `docs` (doc_id, text) through [[StreamingOps.streamingNearDedup]]
     * in doc_id order (event time = epoch + doc_id ms, `batchSize` docs per
-    * micro-batch) and return the (doc_id, kept, dup_of) verdicts. Shared by
-    * the measurement main and the StreamingSpec recall pin so both replay
-    * identically.
+    * micro-batch) and return the (doc_id, kept, dup_of) verdicts.
     */
   def replay(spark: SparkSession, docs: Seq[(Long, String)], threshold: Double,
       batchSize: Int, bandRows: Int = 2): Seq[(Long, Boolean, Option[Long])] = {
@@ -55,41 +52,4 @@ object MeasureStreamDedup {
   def batchDupIds(docs: DataFrame, threshold: Double): Set[Long] =
     Dedup.minHashLshPairs(docs, threshold = threshold)
       .select("b_id").distinct().collect().map(_.getLong(0)).toSet
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // stress corpus: every document plus a near-dup variant (every 29th
-    // token dropped → shingle-level Jaccard ≈ 0.9, above the 0.8 threshold)
-    val base = graft.Tables.documents(spark, sfDir).select("doc_id", "text")
-    val variants = base.select((col("doc_id") + 1000000L).as("doc_id"),
-      array_join(filter(split(col("text"), " "),
-        (_, i) => i % 29 =!= 0), " ").as("text"))
-    val corpus = base.unionByName(variants)
-    import spark.implicits._
-    val rows = corpus.as[(Long, String)].collect().toSeq
-    println(s"corpus=${rows.size} docs (${rows.size / 2} near-dup pairs)")
-
-    for (threshold <- Seq(0.7, 0.8)) {
-      val batchDups = batchDupIds(corpus, threshold) // per threshold, not per config
-      for (bandRows <- Seq(1, 2)) {
-      val verdicts = replay(spark, rows, threshold, batchSize = 500,
-        bandRows = bandRows)
-      val streamDups = verdicts.filter(!_._2).map(_._1).toSet
-      val hits = (batchDups & streamDups).size
-      val extra = (streamDups -- batchDups).size
-      println(f"threshold=$threshold bandRows=$bandRows " +
-        f"batchDups=${batchDups.size} streamDups=${streamDups.size} " +
-        f"recall=${if (batchDups.isEmpty) 1.0 else hits.toDouble / batchDups.size}%.4f " +
-        f"extra=$extra bound(t^r)=${math.pow(threshold, bandRows)}%.3f")
-      }
-    }
-    spark.stop()
-  }
 }

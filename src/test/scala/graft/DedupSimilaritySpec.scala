@@ -1883,7 +1883,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // The REGRESSION FENCE for the approximate serving paths: a plan or
     // probe-parameter regression (nprobe effectively 1, a broken ADC
     // fold, multi-probe buckets lost) would otherwise ship silently —
-    // graft.tools.MeasureLsh measures but nothing gates. Fixture: 20
+    // the MeasureLsh sweep (`git show 613271b:src/main/scala/graft/
+    // tools/MeasureLsh.scala`) measured but nothing gated. Fixture: 20
     // blurry clusters (noise σ=1.1 ≈ center scale), so exact top-10
     // crosses cells and the floors are SENSITIVE: measured on this
     // exact seed, ivfTopK@nprobe=4 reads 0.98 (nprobe=1: 0.82),

@@ -875,6 +875,42 @@ class PipelineOpsSpec extends SparkSpec {
     assert(got("s7_perplexity") == 1L, got.toString)   // all-ones: no-op
   }
 
+  test("recipe prefix table: a standing table reads like the one built inline") {
+    // v5 and v8 read ONE decision table whether the caller passes it as a
+    // standing artifact (the public builders) or the recipe builds it from
+    // the corpus — both forms must report identical stage counts
+    def stats(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Long)].collect().toMap
+    val shared = "alpha beta gamma delta epsilon zeta eta theta iota"
+    // the v5 fixture: five tied docs plus the singleton-vocab tail doc
+    val docs5 = ((1 to 5).map(i => (i.toLong, s"$shared u$i", "en", "s")) :+
+      ((6L, "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10", "en", "s")))
+      .toDF("doc_id", "text", "lang", "source")
+    val eval5 = Seq((100L, "zz1 zz2 zz3 zz4")).toDF("doc_id", "text")
+    val standing5 = Curation.recipePrefixDecisions(docs5, eval5, contamN = 3)
+    val v5 = stats(Curation.cleanCorpusV5Stats(docs5, eval5, contamN = 3))
+    assert(stats(Curation.cleanCorpusV5Stats(docs5, eval5, contamN = 3,
+      prefix = Some(standing5))) == v5, v5.toString)
+    assert(v5("s6_perplexity") == 5L, v5.toString)
+    // the v8 fixture: a lexical, a semantic and a clean survivor
+    val eval8 = Seq((100L, s"$shared kappa")).toDF("doc_id", "text")
+    val docs8 = Seq(
+      (1L, "kappa iota theta eta zeta epsilon delta gamma beta alpha", "en", "s"),
+      (2L, "r1 r2 r3 r4 r5 r6 r7 r8 r9 r10", "en", "s"),
+      (3L, s"$shared more words here", "en", "s")
+    ).toDF("doc_id", "text", "lang", "source")
+    val ones = Seq(1.0, 1.0, 1.0, 1.0, 1.0)
+    val standing8 = Curation.recipePrefixSemExtend(
+      Curation.recipePrefixDecisions(docs8, eval8, contamN = 3),
+      docs8, eval8, semMinCos = 0.9)
+    val v8 = stats(Curation.cleanCorpusV8Stats(docs8, eval8, contamN = 3,
+      pplRates = ones, semMinCos = 0.9))
+    assert(stats(Curation.cleanCorpusV8Stats(docs8, eval8, contamN = 3,
+      pplRates = ones, semMinCos = 0.9, prefix = Some(standing8))) == v8,
+      v8.toString)
+    assert(v8("s6_sem_decontam") == 1L, v8.toString)
+  }
+
   test("semanticContaminationServe: per-batch flags equal the batch decision") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val eval = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
